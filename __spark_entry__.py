@@ -174,8 +174,7 @@ def entry(spark: SparkSession) -> DataFrame:
     edges = _co_edges(spark, "/root/testdata/sf0.001")
     # explicit partitioning: the driver's session may default to 200
     # shuffle partitions, absurd for a 6k-row smoke graph
-    res = pagerank(spark, edges, tol=1e-8, max_iter=60, mode="dataframe",
-                   num_partitions=8)
+    res = pagerank(spark, edges, tol=1e-8, max_iter=60, num_partitions=8)
     return res.ranks.orderBy(F.desc("rank"), F.asc("id")).limit(50)
 
 

@@ -85,8 +85,7 @@ def main() -> None:
 
     # ---- per-trial ops (name -> thunk); trial loop is OUTER (interleaved)
     def run_pagerank():
-        pr = pagerank(spark, edges, tol=1e-6, max_iter=60, mode="dataframe",
-                      num_partitions=shuffle)
+        pr = pagerank(spark, edges, tol=1e-6, max_iter=60, num_partitions=shuffle)
         pr.ranks.count()
         pr_eps_samples.extend(
             m.edges_per_sec for m in pr.metrics.supersteps[2:] if m.wall_ms > 0
@@ -101,10 +100,6 @@ def main() -> None:
         cc.components.count()
         extra["cc_rounds"] = cc.rounds
 
-    # pagerank mode="csr" is NOT a headline op: BENCH/BASELINE.md r3 shows
-    # it wins only the low-parallelism regime (2 cores) and loses to the
-    # dataframe plan at >= 8 — demoted to documented-reference status per
-    # the r2 verdict criterion (modes-agree correctness stays pytest-pinned).
     def run_edge_build():
         # fresh unpersisted build each trial: times scan + self-join +
         # distinct end-to-end (the persisted copy above is untouched).

@@ -65,8 +65,7 @@ def main() -> None:
     detail: dict[str, object] = {}
 
     def run_pagerank():
-        pr = pagerank(spark, edges, tol=1e-6, max_iter=60, mode="dataframe",
-                      num_partitions=shuffle)
+        pr = pagerank(spark, edges, tol=1e-6, max_iter=60, num_partitions=shuffle)
         pr.ranks.count()
         detail["pagerank"] = {
             "iterations": pr.iterations,

@@ -4,9 +4,9 @@ Re-expresses the mission of the reference task-graph library (Citi/pargraph,
 /root/reference) in idiomatic Spark: instead of a hand-rolled DAG scheduler
 (reference: pargraph/engine/engine.py:42-129) we declare DataFrame plans and
 let Catalyst/AQE schedule; instead of GraphBLAS boolean SpMV for frontier
-extraction (reference: pargraph/utility/graphlib_graphblas.py:136-167) we run
-partition-local CSR SpMV kernels in Arrow UDFs followed by hash-shuffle
-message aggregation.
+extraction (reference: pargraph/utility/graphlib_graphblas.py:136-167) we join
+the vertex state against the src-partitioned edge table and finish with
+hash-shuffle message aggregation.
 
 Layout:
   session    — SparkSession factory (Arrow, AQE, shuffle partitioning)

@@ -55,7 +55,7 @@ import operator
 import re
 import warnings
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-from typing import Annotated, Any, Callable, get_args, get_origin
+from typing import Annotated, Any, Callable, Iterable, get_args, get_origin
 
 from pyspark import cloudpickle
 
@@ -422,34 +422,45 @@ def _materialize(result):
     return subst(result)
 
 
+def _dep_order(roots: Iterable, deps: Callable[[Any], Iterable],
+               key: Callable[[Any], Any] = lambda x: x,
+               what: str = "key") -> list:
+    """Dependency-first order: every item reachable from ``roots``, each
+    once (identity ``key(item)``), after every item ``deps(item)`` yields —
+    the post-order a left-to-right recursive walk emits. Iterative, so
+    chains thousands deep never reach the recursion limit. A dependency
+    still on the current path closes a cycle → ValueError."""
+    order: list = []
+    done: set = set()
+    for root in roots:
+        if key(root) in done:
+            continue
+        path = {key(root)}
+        stack = [(root, iter(deps(root)))]
+        while stack:
+            item, pending = stack[-1]
+            for dep in pending:
+                k = key(dep)
+                if k in path:
+                    raise ValueError(f"cycle detected at {what} {dep!r}")
+                if k not in done:
+                    path.add(k)
+                    stack.append((dep, iter(deps(dep))))
+                    break
+            else:
+                stack.pop()
+                k = key(item)
+                path.discard(k)
+                done.add(k)
+                order.append(item)
+    return order
+
+
 def _walk(roots: list[Delayed]) -> list[Delayed]:
     """Deterministic post-order over the DAG (dependencies first), each
     node once (by identity — a shared dependency is a single node).
     Container arguments (list/tuple/dict) are traversed."""
-    order: list[Delayed] = []
-    seen: set[int] = set()
-
-    # iterative post-order: deep linear chains (thousands of overload
-    # nodes — fuse_sequential's own target workload) blew Python's
-    # recursion limit in the recursive form (review r5)
-    for r in roots:
-        stack: list[tuple[Delayed, bool]] = [(r, False)]
-        while stack:
-            node, expanded = stack.pop()
-            if expanded:
-                order.append(node)
-                continue
-            if id(node) in seen:
-                continue
-            seen.add(id(node))
-            stack.append((node, True))
-            # push deps reversed so they pop (and append) in
-            # left-to-right order — identical order to the recursive walk
-            for dep in reversed(list(_node_deps(node))):
-                stack.append((dep, False))
-        # (a dep already seen but not yet appended cannot occur on the
-        # same root: seen is only set when its post-visit is scheduled)
-    return order
+    return _dep_order(roots, _node_deps, key=id)
 
 
 class Backend:
@@ -590,19 +601,20 @@ def get(dsk: dict, keys, scheduler: str = "threads", max_workers: int = 8):
     the result has the same shape. Shared dependencies compute once; a
     reference cycle raises ValueError (reference tests/test_engine.py
     shapes: literals, nested tasks, list aggregation)."""
-    memo: dict[Any, Any] = {}
-    visiting: set = set()
-
-    def build_key(key):
-        if key in memo:
-            return memo[key]
-        if key in visiting:
-            raise ValueError(f"cycle detected in graph at key {key!r}")
-        visiting.add(key)
-        node = build_val(dsk[key])
-        visiting.discard(key)
-        memo[key] = node
-        return node
+    def refs(value):
+        """Graph keys that ``value`` names (task arguments, list elements)."""
+        if _is_task(value):
+            for a in value[1:]:
+                yield from refs(a)
+        elif isinstance(value, list):
+            for el in value:
+                yield from refs(el)
+        else:
+            try:
+                if value in dsk:
+                    yield value
+            except TypeError:  # unhashable literal
+                pass
 
     def build_val(value):
         if _is_task(value):
@@ -616,17 +628,26 @@ def get(dsk: dict, keys, scheduler: str = "threads", max_workers: int = 8):
             return [build_val(el) for el in value]
         try:
             if value in dsk:
-                return build_key(value)
+                return memo[value]  # built earlier: dependencies first
         except TypeError:  # unhashable literal
             pass
         return value
 
-    def shape(ks):
+    def requested(ks):
         if isinstance(ks, list):
-            return [shape(k) for k in ks]
-        if ks not in dsk:
+            for k in ks:
+                yield from requested(k)
+        elif ks not in dsk:
             raise KeyError(f"key {ks!r} not in graph")
-        return build_key(ks)
+        else:
+            yield ks
+
+    memo: dict[Any, Any] = {}
+    for key in _dep_order(requested(keys), lambda k: refs(dsk[k])):
+        memo[key] = build_val(dsk[key])
+
+    def shape(ks):
+        return [shape(k) for k in ks] if isinstance(ks, list) else memo[ks]
 
     built = shape(keys)
 
@@ -913,15 +934,18 @@ class TaskGraph:
                 input_nodes[key] = external_input(key)
             return input_nodes[key]
 
-        built: dict[str, Delayed] = {}
-        building: set[str] = set()
+        def src_node(key: str) -> str | None:
+            """The node a source key reads (through a bound input), if any."""
+            prefix, _, rest = key.partition(":")
+            if prefix == "inputs":
+                bound = doc.get("inputs", {}).get(rest)
+                return None if bound is None else src_node(bound)
+            return key.split(":")[1] if prefix == "nodes" else None
+
+        def node_deps(nid: str) -> list[str]:
+            return [d for d in map(src_node, node_args[nid].values()) if d]
 
         def build_node(nid: str) -> Delayed:
-            if nid in built:
-                return built[nid]
-            if nid in building:
-                raise ValueError(f"cycle detected at node {nid!r}")
-            building.add(nid)
             nd = doc["nodes"][nid]
             fn_field = nd["function"]
             if nd.get("serialized", False):
@@ -935,10 +959,7 @@ class TaskGraph:
                     )
                 fn = getattr(__import__(mod, fromlist=[attr]), attr)
             kwargs = {p: resolve_src(srcs) for p, srcs in sorted(node_args[nid].items())}
-            building.discard(nid)
-            node = Delayed(fn, (), kwargs, name=nid)
-            built[nid] = node
-            return node
+            return Delayed(fn, (), kwargs, name=nid)
 
         def resolve_src(key: str):
             prefix, _, rest = key.partition(":")
@@ -950,7 +971,7 @@ class TaskGraph:
                 parts = key.split(":")
                 # edge-list form nodes:k:outputs:o, node-args form nodes:k:o
                 nid = parts[1]
-                node = build_node(nid)
+                node = built[nid]  # built earlier: dependencies first
                 # a named output of a MULTI-output node selects that
                 # element (review r5: dropping the name silently handed
                 # consumers the whole tuple); single-output nodes pass
@@ -980,13 +1001,16 @@ class TaskGraph:
                 int(p) if p.isdigit() else p for p in re.split(r"(\d+)", k)
             ]
 
-        roots = [
-            resolve_src(v)
-            for _, v in sorted(
+        outputs = [
+            v for _, v in sorted(
                 doc.get("outputs", {}).items(), key=lambda kv: _natkey(kv[0])
             )
         ]
-        return cls(roots)
+        built: dict[str, Delayed] = {}
+        wanted = [d for d in map(src_node, outputs) if d]
+        for nid in _dep_order(wanted, node_deps, what="node"):
+            built[nid] = build_node(nid)
+        return cls([resolve_src(v) for v in outputs])
 
     # ---- user-invocable rewrites (reference objects.py:653-932) --------
     # The reference's four rewrites map onto this model as: cull and

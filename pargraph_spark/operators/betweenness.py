@@ -197,12 +197,14 @@ def betweenness(
                 )
             )
             dump_plan(dd, "betweenness_backward_level")
-            # lazy (r6): level d's blocks are computed inside level d-1's
-            # materializing job (the chain stays one level deep — each
-            # lazy checkpoint's input deltas[d+1] is already materialized);
-            # the last one (deltas[1]) is computed by the scores job. All
-            # are materialized before the unpersist sweep at the end
-            # because scores is an EAGER checkpoint downstream of them.
+            # lazy (r6): no action runs per level, so NOTHING here is
+            # materialized yet — the whole delta chain (deltas[1] down to
+            # the deepest level, plus the forward levels and e it reads)
+            # is computed in the single scores job below, the EAGER
+            # checkpoint downstream of all of them. Only that outermost
+            # checkpoint truncates lineage, so levels, deltas and e must
+            # stay cached until scores materializes: unpersisting any of
+            # them per level would force recomputation from the roots.
             deltas[d] = dd.localCheckpoint(eager=False)
 
         if len(levels) > 1:

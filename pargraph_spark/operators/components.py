@@ -116,6 +116,7 @@ def connected_components(
 
     ckpt = CheckpointManager(checkpoint_dir, "components") if checkpoint_dir else None
     start_round = 0
+    converged = False
     e = None
     if ckpt and resume:
         m = ckpt.latest()
@@ -123,9 +124,14 @@ def connected_components(
             e = (
                 ckpt.load(spark, int(m["superstep"]))
                 .repartition(P, "u")
-                .localCheckpoint(eager=False)  # materialized by the initial signature
+                # materialized by the initial signature (the final join on
+                # a converged resume)
+                .localCheckpoint(eager=False)
             )
             start_round = int(m["superstep"])
+            # a converged manifest holds the fixpoint star forest: no round
+            # needs to rerun (same short-circuit as labelprop's resume)
+            converged = bool(m.get("converged"))
     if e is None:
         # setup in ONE E-scale exchange (r6, the pagerank/scc idiom):
         # canonicalize the orientation up front (CC is undirected — the
@@ -173,40 +179,40 @@ def connected_components(
         ).first()
         return int(row["c"]), int(row["h"])
 
-    converged = False
     rounds = start_round
-    sig = _signature(e, assume_canonical=True)
-    n_edges0 = sig[0]
-    for rounds in range(start_round + 1, max_rounds + 1):
-        t0 = time.monotonic()
-        # materialize the large-star output once per round (r6, the
-        # triangle_count idiom): small-star references it three times
-        # (min-agg, neighbor probe, via_self) and only identical Exchange
-        # nodes get runtime reuse — unmaterialized, the E-scale large-star
-        # join re-executed under the probe-side exchange every round
-        ls = _large_star(e, dedup=False).localCheckpoint(eager=True)
-        new_e = _small_star(ls, oriented=True)
-        dump_plan(new_e, "cc_round")
-        # lazy (r6): the signature aggregate below is a full scan — it
-        # materializes the round's blocks in the SAME job (one job per
-        # round for checkpoint+signature instead of two); ls and the
-        # superseded e are released only after that job runs
-        new_e = new_e.localCheckpoint(eager=False)
-        new_sig = _signature(new_e, assume_canonical=True)
-        ls.unpersist()
-        e.unpersist()
-        e = new_e
-        metrics.add(SuperstepMetric(rounds, (time.monotonic() - t0) * 1000.0,
-                                    n_edges0, float(abs(new_sig[0] - sig[0]))))
-        if ckpt and (rounds % checkpoint_every == 0):
-            ckpt.save(e, rounds, {"n_edges": new_sig[0], "checksum": new_sig[1]})
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if ckpt and converged and (rounds % checkpoint_every != 0):
-        ckpt.save(e, rounds, {"n_edges": sig[0], "checksum": sig[1],
-                              "converged": True})
+    if not converged:
+        sig = _signature(e, assume_canonical=True)
+        n_edges0 = sig[0]
+        for rounds in range(start_round + 1, max_rounds + 1):
+            t0 = time.monotonic()
+            # materialize the large-star output once per round (r6, the
+            # triangle_count idiom): small-star references it three times
+            # (min-agg, neighbor probe, via_self) and only identical Exchange
+            # nodes get runtime reuse — unmaterialized, the E-scale large-star
+            # join re-executed under the probe-side exchange every round
+            ls = _large_star(e, dedup=False).localCheckpoint(eager=True)
+            new_e = _small_star(ls, oriented=True)
+            dump_plan(new_e, "cc_round")
+            # lazy (r6): the signature aggregate below is a full scan — it
+            # materializes the round's blocks in the SAME job (one job per
+            # round for checkpoint+signature instead of two); ls and the
+            # superseded e are released only after that job runs
+            new_e = new_e.localCheckpoint(eager=False)
+            new_sig = _signature(new_e, assume_canonical=True)
+            ls.unpersist()
+            e.unpersist()
+            e = new_e
+            metrics.add(SuperstepMetric(rounds, (time.monotonic() - t0) * 1000.0,
+                                        n_edges0, float(abs(new_sig[0] - sig[0]))))
+            if ckpt and (rounds % checkpoint_every == 0):
+                ckpt.save(e, rounds, {"n_edges": new_sig[0], "checksum": new_sig[1]})
+            if new_sig == sig:
+                converged = True
+                break
+            sig = new_sig
+        if ckpt and converged and (rounds % checkpoint_every != 0):
+            ckpt.save(e, rounds, {"n_edges": sig[0], "checksum": sig[1],
+                                  "converged": True})
 
     # vertex set (r6): star rounds PRESERVE the edge set's vertex set —
     # large-star keeps every endpoint (a local-max u re-emits (v, u); any

@@ -1,28 +1,13 @@
 """O6 — iterative PageRank with dangling-mass redistribution (SURVEY.md §2.3).
 
-Two physical strategies behind one API:
-
-- mode="dataframe": the pure-Catalyst plan — ranks ⋈ edges on src, then
-  groupBy(dst).sum. Whole-stage-codegen JVM end to end; partial (map-side)
-  aggregation absorbs hub-dst skew in the sum. The simple, always-correct
-  baseline.
-
-- mode="csr": the explicit-SpMV DOCUMENTED-REFERENCE path (round-3
-  verdict, BENCH/BASELINE.md: after the block-store rearchitecture it
-  wins the low-parallelism regime — +34% absolute edges/s at 2 cores —
-  but the dataframe plan scales with cores better and leads at ≥8, so
-  csr is opt-in and NOT the bench headline). Edges are packed ONCE into
-  per-partition CSR blocks persisted as a pid-partitioned parquet store
-  (operators/csr.py); each superstep groups the rank vector by pid and
-  runs a partition-local numpy SpMV in an Arrow UDF against the worker's
-  LRU-cached prepped block (degrees + dst inverse-index precomputed, so
-  the in-block combine is one linear bincount), emitting messages
-  pre-combined per block; a hash-shuffle sum keyed by dst finishes the
-  superstep. Per iteration only the V-scale rank vector crosses Arrow;
-  the E-row block arrays never move after the store write. This is the
-  distributed re-expression of the reference's GraphBLAS semiring SpMV
-  frontier kernel
-  (/root/reference/pargraph/utility/graphlib_graphblas.py:156-167).
+One physical plan: each superstep is the pure-Catalyst ranks ⋈ edges on
+src, then groupBy(dst).sum — the distributed re-expression of the
+reference's GraphBLAS semiring SpMV frontier kernel
+(graphlib_graphblas.py:156-167). Whole-stage-codegen JVM end to end; the
+persisted edge table is hash(src)-partitioned once, so only the V-scale
+rank projection and the combined messages cross the network per
+superstep, and partial (map-side) aggregation absorbs hub-dst skew in
+the sum.
 
 Semantics (shared with tests/oracles.py::pagerank_oracle):
     r_0(v)     = 1/N
@@ -43,23 +28,16 @@ loop, engine.py:42-129, which Catalyst replaces per-superstep):
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 import time
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pargraph_spark.operators.csr import spmv_from_store, with_pid, write_csr_store
 from pargraph_spark.session import no_aqe, size_based_partitions
 from pargraph_spark.plans.debug import dump_plan
 from pargraph_spark.plans.checkpoint import CheckpointManager
 from pargraph_spark.plans.metrics import JobMetrics, SuperstepMetric
-
-MSG_SCHEMA = "dst long, msg double"
 
 
 @dataclass
@@ -112,7 +90,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float = 1e-9,
     max_iter: int = 100,
-    mode: str = "dataframe",
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
@@ -139,7 +116,6 @@ def pagerank(
     weight_col: optional edge-weight column → WEIGHTED PageRank: a source
     splits its rank proportionally to edge weight, r(u)·w(u,v)/W(u) with
     W(u) = Σ_out w (duplicate (src,dst) rows combine by summing weights).
-    dataframe mode only (csr packs unweighted adjacency).
 
     warm_start: optional (id, rank) prior — e.g. the converged ranks of a
     previous run loaded via load_latest_ranks — for INCREMENTAL PageRank
@@ -151,10 +127,6 @@ def pagerank(
     supersteps when the drop is small relative to the graph. Ignored when
     `resume` finds a committed checkpoint of THIS run (mid-run state beats
     a cross-run prior)."""
-    if mode not in ("dataframe", "csr"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if weight_col is not None and mode == "csr":
-        raise NotImplementedError("weighted PageRank: use mode='dataframe'")
     P = num_partitions or spark.conf.get("spark.sql.shuffle.partitions")
     # scale-adaptive: treat the caller's count as a cap and size the
     # edge/state partitioning from the input's estimated bytes (guide
@@ -219,30 +191,6 @@ def pagerank(
         empty = spark.createDataFrame([], "id long, rank double")
         return PageRankResult(empty, 0, True, JobMetrics("pagerank"))
 
-    store_dir = None
-    if mode == "csr":
-        # Materialize CSR blocks ONCE into a pid-partitioned parquet store.
-        # Round 2 cogrouped a cached blocks DataFrame against the ranks,
-        # which re-shipped the E-scale block arrays through Arrow every
-        # superstep (the measured CSR bottleneck, VERDICT r2 #2); with the
-        # store, each superstep ships only the V-scale rank vector and
-        # workers serve blocks from a process-local LRU (csr.py), falling
-        # back to a one-pid parquet read on a cache miss. The store dir is
-        # unique PER RUN (uuid suffix) so a later run in the same Spark app
-        # can never alias a prior run's worker-cache entries (ADVICE r3 —
-        # the fixed <checkpoint_dir>/csr_store path let reused Python
-        # workers serve the previous run's blocks); the store is transient
-        # (rebuilt from edges each run), so it is removed on exit either way.
-        import uuid
-
-        if checkpoint_dir:
-            store_dir = os.path.join(
-                checkpoint_dir, f"csr_store_{uuid.uuid4().hex[:12]}"
-            )
-        else:
-            store_dir = tempfile.mkdtemp(prefix="pargraph_csr_")
-        write_csr_store(edges, P, store_dir)
-
     # teleport weight as an expression: a literal for classic PageRank
     # (state stays narrow), the materialized _tw column for personalized
     tw = F.lit(1.0 / n) if teleport is None else F.col("_tw")
@@ -295,13 +243,10 @@ def pagerank(
     # aggregation — the only shuffle PageRank fundamentally needs,
     # guide §2.4).
 
-    metrics = JobMetrics(f"pagerank[{mode}]")
+    metrics = JobMetrics("pagerank")
     deltas: list[float] = []
     converged = False
     it = start_iter
-
-    def _spmv(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return spmv_from_store(store_dir, int(key[0]), pdf)
 
     def _delta_dang(df: DataFrame) -> tuple[float, float]:
         """ONE V-scan producing (L∞ delta of this superstep, dangling mass
@@ -333,32 +278,23 @@ def pagerank(
         while it < max_iter:
             it += 1
             t0 = time.monotonic()
-            if mode == "dataframe":
-                contrib = (
-                    F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
+            contrib = (
+                F.col("_rw") * edges["w"] if weight_col is not None else F.col("_rw")
+            )
+            # shuffle_hash: the build side is the V-scale rank projection
+            # (V/P rows per task — bounded like any hash-agg state); SMJ
+            # would re-SORT the persisted E-scale edge table every
+            # superstep (guide §3.1: pick the strategy deliberately)
+            msgs = (
+                edges.join(
+                    ranks.where(F.col("outdeg") > 0).select(
+                        F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
+                    ).hint("shuffle_hash"),
+                    edges["src"] == F.col("id"),
                 )
-                # shuffle_hash: the build side is the V-scale rank projection
-                # (V/P rows per task — bounded like any hash-agg state); SMJ
-                # would re-SORT the persisted E-scale edge table every
-                # superstep (guide §3.1: pick the strategy deliberately)
-                msgs = (
-                    edges.join(
-                        ranks.where(F.col("outdeg") > 0).select(
-                            F.col("id"), (F.col("rank") / F.col("outdeg")).alias("_rw")
-                        ).hint("shuffle_hash"),
-                        edges["src"] == F.col("id"),
-                    )
-                    .groupBy("dst")
-                    .agg(F.sum(contrib).alias("msg"))
-                )
-            else:
-                rank_g = with_pid(ranks.select("id", "rank"), "id", P)
-                msgs = (
-                    rank_g.groupBy("pid")
-                    .applyInPandas(_spmv, schema=MSG_SCHEMA)
-                    .groupBy("dst")
-                    .agg(F.sum("msg").alias("msg"))
-                )
+                .groupBy("dst")
+                .agg(F.sum(contrib).alias("msg"))
+            )
             new_ranks = (
                 ranks.join(msgs.hint("shuffle_hash"),
                            ranks["id"] == msgs["dst"], "left")
@@ -420,6 +356,4 @@ def pagerank(
     # ref-count release of dead intermediates (engine.py:63-76).
     edges.unpersist()
     base.unpersist()
-    if store_dir:
-        shutil.rmtree(store_dir, ignore_errors=True)
     return PageRankResult(result, it, converged, metrics, deltas)

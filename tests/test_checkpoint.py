@@ -82,6 +82,31 @@ def test_cc_resume_equals_uninterrupted(spark, tmp_path):
     assert got == ref
 
 
+def test_cc_resume_of_converged_run_reports_converged(spark, tmp_path):
+    from pargraph_spark.operators.components import connected_components
+
+    edf = _edges(spark)
+    ckpt_dir = str(tmp_path / "cc")
+    # checkpoint_every above the round count: only the converged save runs
+    full = connected_components(spark, edf, num_partitions=4,
+                                checkpoint_dir=ckpt_dir, checkpoint_every=100)
+    assert full.converged
+    ref = {r["id"]: r["component"] for r in full.components.collect()}
+    m = CheckpointManager(ckpt_dir, "components").latest()
+    assert m["converged"] and m["superstep"] == full.rounds
+
+    # start_round == max_rounds: no round runs, yet the run is converged
+    resumed = connected_components(spark, edf, num_partitions=4,
+                                   max_rounds=full.rounds,
+                                   checkpoint_dir=ckpt_dir, checkpoint_every=100,
+                                   resume=True)
+    assert resumed.converged
+    assert resumed.rounds == full.rounds
+    assert {r["id"]: r["component"] for r in resumed.components.collect()} == ref
+    # nothing was re-saved
+    assert CheckpointManager(ckpt_dir, "components").latest() == m
+
+
 def test_lpa_resume_equals_uninterrupted(spark, tmp_path):
     from pargraph_spark.operators.labelprop import label_propagation
 

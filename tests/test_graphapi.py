@@ -738,3 +738,52 @@ def test_walk_survives_deep_overload_chain():
     for _ in range(3000):
         x = x + 1
     assert x.compute() == 3001
+
+
+def test_get_deep_key_chain():
+    # key chains deeper than the recursion limit build and run
+    from pargraph_spark.graphapi import get
+
+    def inc(v):
+        return v + 1
+
+    dsk = {"c0": 0}
+    for i in range(1, 1000):
+        dsk[f"c{i}"] = (inc, f"c{i - 1}")
+    assert get(dsk, "c999") == 999
+    assert get(dsk, ["c999", ["c0"]]) == [999, [0]]
+
+
+def test_pargraph_json_deep_chain_round_trips():
+    # from_pargraph_json must load every chain to_pargraph_json writes
+    @delayed
+    def inc(v):
+        return v + 1
+
+    x = inc(0)
+    for _ in range(999):
+        x = inc(x)
+    back = TaskGraph.from_pargraph_json(TaskGraph([x]).to_pargraph_json())
+    assert back.compute() == [1000]
+
+
+def test_pargraph_json_cycle_raises():
+    import base64 as _b64
+
+    import pytest
+    from pyspark import cloudpickle as _cp
+
+    fn = _b64.b64encode(_cp.dumps(lambda x: x)).decode()
+    doc = {
+        "consts": {},
+        "inputs": {},
+        "nodes": {
+            "n0": {"function": fn, "serialized": True,
+                   "args": {"x": "nodes:n1:result"}},
+            "n1": {"function": fn, "serialized": True,
+                   "args": {"x": "nodes:n0:result"}},
+        },
+        "outputs": {"result": "nodes:n1:result"},
+    }
+    with pytest.raises(ValueError, match="cycle"):
+        TaskGraph.from_pargraph_json(json.dumps(doc))
