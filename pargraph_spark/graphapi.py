@@ -19,17 +19,23 @@ Parity target (behavior, not mechanism):
 
 Design stance (SURVEY.md §7.0): the reference needs a scheduler because
 its tasks ARE the computation; here a task's body is usually a DataFrame
-program, so the CLUSTER does the heavy lifting and the "backend" is a
-driver-side thread pool that submits independent Spark jobs concurrently
-(threads share the SparkSession; separate scheduler pools would give
-fairness if needed). There is no dict-graph IR, no rewrite engine —
-Catalyst culls/fuses each node's plan; this module only orders node
-execution and memoizes shared dependencies (the diamond in a DAG runs
+program, so the CLUSTER does the heavy lifting and this module only
+orders node execution, runs independent nodes concurrently (threads
+share the SparkSession; separate scheduler pools would give fairness if
+needed) and memoizes shared dependencies (the diamond in a DAG runs
 once, like the reference's ref-counted futures, engine.py:42-129).
-Scheduling note: the threaded scheduler runs the same FIRST_COMPLETED
-frontier as the reference (engine.py:79-100) — a node is submitted the
-moment its last dependency resolves, so a straggler never delays an
-independent ready node.
+There is no dict-graph IR, no rewrite engine — Catalyst culls/fuses
+each node's plan.
+
+Scheduling: compute() starts ``max_workers`` worker threads that pull
+ready nodes from one queue. The worker that finishes a node stores its
+result, counts down each dependent's unresolved dependencies and queues
+every dependent that just became ready — so a node is released the
+moment its last dependency finishes and a straggler never delays an
+independent ready node (the property the reference gets from its
+first-completed loop, engine.py:79-100), with no per-node future and no
+round trip through the calling thread. Node bodies run on threads
+because real nodes are Spark jobs that release the GIL in py4j calls.
 
 Example::
 
@@ -52,9 +58,10 @@ import functools
 import inspect
 import json
 import operator
+import queue
 import re
+import threading
 import warnings
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from typing import Annotated, Any, Callable, Iterable, get_args, get_origin
 
 from pyspark import cloudpickle
@@ -124,8 +131,10 @@ def _get_output_names(function: Callable):
 
 def _iter_deps(value: Any):
     """Yield every Delayed reachable from an argument value, traversing
-    list/tuple/dict containers (dask-delayed style — ADVICE r3: a Delayed
-    nested in a container used to be silently treated as a constant)."""
+    list/tuple/set/frozenset/dict containers — the one definition of
+    which containers hold graph edges (dask-delayed style — ADVICE r3: a
+    Delayed nested in a container used to be silently treated as a
+    constant)."""
     if isinstance(value, Delayed):
         yield value
     elif isinstance(value, (list, tuple, set, frozenset)):
@@ -139,8 +148,28 @@ def _iter_deps(value: Any):
 
 
 def _node_deps(node: "Delayed"):
-    for v in list(node.args) + list(node.kwargs.values()):
-        yield from _iter_deps(v)
+    for v in (*node.args, *node.kwargs.values()):
+        if isinstance(v, Delayed):  # the common case, without a generator
+            yield v
+        else:
+            yield from _iter_deps(v)
+
+
+def _substitute(value: Any, values: dict[int, Any]) -> Any:
+    """``value`` with every Delayed ``d`` replaced by ``values[id(d)]``,
+    through every container _iter_deps traverses (dict keys included).
+    A container holding a Delayed is rebuilt as a plain
+    list/tuple/set/frozenset/dict; any other value is returned as is."""
+    if isinstance(value, Delayed):
+        return values[id(value)]
+    if (not isinstance(value, (list, tuple, set, frozenset, dict))
+            or next(_iter_deps(value), None) is None):
+        return value
+    if isinstance(value, dict):
+        return {_substitute(k, values): _substitute(v, values)
+                for k, v in value.items()}
+    kind = next(t for t in (list, tuple, set, frozenset) if isinstance(value, t))
+    return kind(_substitute(el, values) for el in value)
 
 
 class Delayed:
@@ -381,45 +410,16 @@ def graph(function: Callable) -> Callable:
 
 
 def _materialize(result):
-    """Compute every Delayed inside a direct-call @graph result. Handles
-    the same container shapes _iter_deps traverses (list/tuple/dict/set)
-    — review r5: a body returning [d1, d2] used to leak uncomputed
-    Delayed objects to the caller, breaking the direct-call identity.
-    All found nodes go through ONE compute() call so shared subgraphs
-    stay memoized across container elements."""
-    if isinstance(result, Delayed):
-        return result.compute()
-    found: list = []
-
-    def collect(x):
-        if isinstance(x, Delayed):
-            found.append(x)
-        elif isinstance(x, (list, tuple, set)):
-            for v in x:
-                collect(v)
-        elif isinstance(x, dict):
-            for v in x.values():
-                collect(v)
-
-    collect(result)
+    """Compute every Delayed inside a direct-call @graph result, through
+    every container shape _iter_deps traverses — review r5: a body
+    returning [d1, d2] used to leak uncomputed Delayed objects to the
+    caller, breaking the direct-call identity. All found nodes go
+    through ONE compute() call so shared subgraphs stay memoized across
+    container elements."""
+    found = list(_iter_deps(result))
     if not found:
         return result
-    values = {id(d): v for d, v in zip(found, compute(*found))}
-
-    def subst(x):
-        if isinstance(x, Delayed):
-            return values[id(x)]
-        if isinstance(x, list):
-            return [subst(v) for v in x]
-        if isinstance(x, tuple):
-            return tuple(subst(v) for v in x)
-        if isinstance(x, set):
-            return {subst(v) for v in x}
-        if isinstance(x, dict):
-            return {k: subst(v) for k, v in x.items()}
-        return x
-
-    return subst(result)
+    return _substitute(result, dict(zip(map(id, found), compute(*found))))
 
 
 def _dep_order(roots: Iterable, deps: Callable[[Any], Iterable],
@@ -459,8 +459,30 @@ def _dep_order(roots: Iterable, deps: Callable[[Any], Iterable],
 def _walk(roots: list[Delayed]) -> list[Delayed]:
     """Deterministic post-order over the DAG (dependencies first), each
     node once (by identity — a shared dependency is a single node).
-    Container arguments (list/tuple/dict) are traversed."""
+    Container arguments (list/tuple/set/frozenset/dict) are traversed."""
     return _dep_order(roots, _node_deps, key=id)
+
+
+def _plan(roots: list[Delayed]):
+    """The _walk order plus the threaded scheduler's tables, built in the
+    same walk: the nodes with no Delayed dependency (``sources``, in walk
+    order); per node id with k > 1 distinct dependencies, a countdown
+    ``[0, ..., k-1]``; per dependency id, the nodes consuming it."""
+    sources: list[Delayed] = []
+    countdown: dict[int, list[int]] = {}
+    dependents: dict[int, list[Delayed]] = {}
+
+    def deps(node: Delayed):
+        distinct = {id(d): d for d in _node_deps(node)}
+        if not distinct:
+            sources.append(node)
+        elif len(distinct) > 1:
+            countdown[id(node)] = list(range(len(distinct)))
+        for d in distinct:
+            dependents.setdefault(d, []).append(node)
+        return distinct.values()
+
+    return _dep_order(roots, deps, key=id), sources, countdown, dependents
 
 
 class Backend:
@@ -468,7 +490,12 @@ class Backend:
     with ``submit(fn, *args, **kwargs) -> concurrent.futures.Future``.
     Every ``concurrent.futures.Executor`` already satisfies it; subclass
     this (or duck-type) to route node execution elsewhere — e.g. a pool
-    with per-query Spark scheduler pools, or a remote submission shim."""
+    with per-query Spark scheduler pools, or a remote submission shim.
+
+    compute() calls ``submit`` once per node, from its worker threads, and
+    blocks on the returned future's ``result()`` in that worker — so at
+    most ``max_workers`` nodes are in flight on a backend, and ``submit``
+    must be thread-safe (every ``concurrent.futures.Executor`` is)."""
 
     def submit(self, fn: Callable, /, *args: Any, **kwargs: Any):
         raise NotImplementedError
@@ -499,35 +526,29 @@ def compute(
 ) -> list[Any]:
     """Execute the DAG under the given roots; returns one result per root.
 
-    scheduler="threads" runs independent ready nodes concurrently in a
-    driver thread pool (concurrent Spark job submission — the idiomatic
-    Spark counterpart of the reference's process backends, which would
-    only add pickling overhead around JVM-side work).
+    scheduler="threads" runs independent ready nodes concurrently on
+    ``max_workers`` driver threads (concurrent Spark job submission — the
+    idiomatic Spark counterpart of the reference's process backends,
+    which would only add pickling overhead around JVM-side work). Release
+    is worker-driven: the thread that finishes a node queues every
+    dependent that was waiting only on it, so a straggler never delays an
+    independent ready node. At most ``max_workers`` nodes run at once.
     scheduler="sync" runs nodes sequentially in topological order.
-    backend: optional Backend/Executor whose submit() replaces the
-    built-in thread pool (frontier scheduling is unchanged; sync mode
-    ignores it). inputs: values for external_input() placeholders.
+    backend: optional Backend/Executor that runs each node instead: a
+    worker thread calls ``backend.submit(node_fn, node)`` and blocks on
+    its result, so ``max_workers`` also bounds the nodes in flight on the
+    backend and ``submit`` is called from worker threads (it must be
+    thread-safe). Sync mode ignores it. inputs: values for
+    external_input() placeholders.
     Shared nodes are computed exactly once (memoized per compute call).
-    Delayed nodes nested inside list/tuple/set/dict arguments are
-    resolved in place (the container is rebuilt with results
+    The first node error is re-raised once the running nodes finish; no
+    node that depends on the failed one runs.
+    Delayed nodes nested inside list/tuple/set/frozenset/dict arguments
+    are resolved in place (the container is rebuilt with results
     substituted)."""
     if scheduler not in ("threads", "sync"):
         raise ValueError(f"unknown scheduler {scheduler!r}")
-    order = _walk(list(roots))
     results: dict[int, Any] = {}
-
-    def resolve(v):
-        if isinstance(v, Delayed):
-            return results[id(v)]
-        if isinstance(v, list):
-            return [resolve(el) for el in v]
-        if isinstance(v, tuple):
-            return tuple(resolve(el) for el in v)
-        if isinstance(v, (set, frozenset)):
-            return type(v)(resolve(el) for el in v)
-        if isinstance(v, dict):
-            return {resolve(k): resolve(el) for k, el in v.items()}
-        return v
 
     def run(node: Delayed):
         if node.fn is _unbound_input:
@@ -535,51 +556,88 @@ def compute(
             if inputs is not None and key in inputs:
                 return inputs[key]
             _unbound_input(key=key)  # raises with the missing-input message
-        args = [resolve(a) for a in node.args]
-        kwargs = {k: resolve(v) for k, v in node.kwargs.items()}
+        args = [_substitute(a, results) for a in node.args]
+        kwargs = {k: _substitute(v, results) for k, v in node.kwargs.items()}
         return node.fn(*args, **kwargs)
 
     if scheduler == "sync":
-        for node in order:
+        for node in _walk(list(roots)):
             results[id(node)] = run(node)
     else:
-        # FIRST_COMPLETED frontier (reference engine.py:79-100): a node is
-        # submitted the moment its last dependency resolves, and every
-        # future completion immediately releases its ready dependents — a
-        # straggler never blocks an independent ready node (the wave
-        # barrier this replaces made one slow node gate the entire next
-        # wave, VERDICT r4 missing #1).
-        nodes = {id(n): n for n in order}
-        deps = {id(n): {id(d) for d in _node_deps(n)} for n in order}
-        dependents: dict[int, list[int]] = {}
-        for nid, ds in deps.items():
-            for d in ds:
-                dependents.setdefault(d, []).append(nid)
-        unresolved = {nid: len(ds) for nid, ds in deps.items()}
-        pool = ThreadPoolExecutor(max_workers=max_workers) if backend is None else None
-        submitter = pool.submit if backend is None else backend.submit
-        try:
-            inflight: dict[Any, int] = {}
-
-            def submit(nid: int) -> None:
-                inflight[submitter(run, nodes[nid])] = nid
-
-            for nid, k in unresolved.items():
-                if k == 0:
-                    submit(nid)
-            while inflight:
-                done, _ = wait(set(inflight), return_when=FIRST_COMPLETED)
-                for fut in done:
-                    nid = inflight.pop(fut)
-                    results[nid] = fut.result()  # re-raises node errors
-                    for m in dependents.get(nid, ()):
-                        unresolved[m] -= 1
-                        if unresolved[m] == 0:
-                            submit(m)
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=True)
+        if max_workers < 1:
+            raise ValueError("max_workers must be at least 1")
+        call = run if backend is None else (
+            lambda node: backend.submit(run, node).result()
+        )
+        _run_workers(_plan(list(roots)), call, results, max_workers)
     return [results[id(r)] for r in roots]
+
+
+def _run_workers(plan, call: Callable[[Delayed], Any],
+                 results: dict[int, Any], max_workers: int) -> None:
+    """Run every node of a _plan through ``call`` on up to ``max_workers``
+    threads, storing each value in ``results`` by node id.
+
+    Workers pull ready nodes from one queue. The worker that finishes a
+    node stores its value, then for each dependent pops one entry off its
+    countdown and queues it when that entry is 0 (a node with a single
+    dependency is queued at once). When every node is done, or on the
+    first error, each worker gets a stop sentinel; this thread joins them
+    all, then re-raises that error.
+
+    The countdowns take no lock: list.pop() and list.append() are atomic
+    (Python FAQ, "What kinds of global value mutation are thread-safe?"),
+    so exactly one worker pops a countdown's 0. A lock around them made
+    the workers queue on it after nearly every node, each hand-off a
+    context switch that cost more than the node itself."""
+    order, sources, countdown, dependents = plan
+    ready: queue.SimpleQueue = queue.SimpleQueue()
+    for node in sources:
+        ready.put(node)
+    n_threads = min(max_workers, len(order))
+    left = list(range(len(order)))
+    errors: list[BaseException] = []
+    stopped = False
+    stop_lock = threading.Lock()
+
+    def stop() -> None:
+        nonlocal stopped
+        with stop_lock:
+            if not stopped:
+                stopped = True
+                for _ in range(n_threads):
+                    ready.put(None)
+
+    def worker() -> None:
+        while True:
+            node = ready.get()
+            if node is None or stopped:
+                return
+            try:
+                value = call(node)
+            except BaseException as e:
+                errors.append(e)
+                stop()
+                return
+            results[id(node)] = value
+            for m in dependents.get(id(node), ()):
+                c = countdown.get(id(m))
+                if c is None or not c.pop():
+                    ready.put(m)
+            if not left.pop():
+                stop()
+
+    threads = [threading.Thread(target=worker, name=f"graphapi-worker-{i}",
+                                daemon=True) for i in range(n_threads)]
+    for t in threads:
+        t.start()
+    try:
+        for t in threads:
+            t.join()
+    finally:
+        stop()  # after an interrupted join, lets the workers wind down
+    if errors:
+        raise errors[0]
 
 
 # ---------------------------------------------------------------------------
@@ -650,32 +708,10 @@ def get(dsk: dict, keys, scheduler: str = "threads", max_workers: int = 8):
         return [shape(k) for k in ks] if isinstance(ks, list) else memo[ks]
 
     built = shape(keys)
-
     # one compute() over every Delayed root for shared-dependency memoization
-    roots: list[Delayed] = []
-
-    def collect(v):
-        if isinstance(v, Delayed):
-            roots.append(v)
-        elif isinstance(v, list):
-            for el in v:
-                collect(el)
-
-    collect(built)
-    if roots:
-        values = compute(*roots, scheduler=scheduler, max_workers=max_workers)
-        resolved = dict(zip((id(r) for r in roots), values))
-    else:
-        resolved = {}
-
-    def unbuild(v):
-        if isinstance(v, Delayed):
-            return resolved[id(v)]
-        if isinstance(v, list):
-            return [unbuild(el) for el in v]
-        return v
-
-    return unbuild(built)
+    roots = list(_iter_deps(built))
+    values = compute(*roots, scheduler=scheduler, max_workers=max_workers)
+    return _substitute(built, dict(zip(map(id, roots), values)))
 
 
 # ---- pargraph wire-format helpers (reference objects.py:36-101) ----------
@@ -1052,20 +1088,9 @@ class TaskGraph:
             rebuilt: dict[int, Delayed] = {}
             fused_any = False
 
-            def sub(v, mapping):
-                if isinstance(v, Delayed):
-                    return mapping[id(v)]
-                if isinstance(v, list):
-                    return [sub(el, mapping) for el in v]
-                if isinstance(v, tuple):
-                    return tuple(sub(el, mapping) for el in v)
-                if isinstance(v, dict):
-                    return {k: sub(el, mapping) for k, el in v.items()}
-                return v
-
             for n in order:
-                args = tuple(sub(a, rebuilt) for a in n.args)
-                kwargs = {k: sub(v, rebuilt) for k, v in n.kwargs.items()}
+                args = tuple(_substitute(a, rebuilt) for a in n.args)
+                kwargs = {k: _substitute(v, rebuilt) for k, v in n.kwargs.items()}
                 # fusable parent: a DIRECT arg that is this node's only
                 # consumer use, not a root, and n's only Delayed dep
                 direct = [a for a in args if isinstance(a, Delayed)] + [

@@ -11,6 +11,8 @@ import json
 
 from typing import Annotated
 
+import pytest
+
 from pargraph_spark.graphapi import (
     Delayed,
     Result,
@@ -787,3 +789,223 @@ def test_pargraph_json_cycle_raises():
     }
     with pytest.raises(ValueError, match="cycle"):
         TaskGraph.from_pargraph_json(json.dumps(doc))
+
+
+def _call_within(fn, seconds: float = 30.0):
+    """fn() on a daemon thread, failing (not hanging the suite) if it has
+    not returned after ``seconds``."""
+    import threading
+
+    out: dict = {}
+
+    def target():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # surfaced below
+            out["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"{fn} did not return within {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.mark.parametrize("shape", ["set", "dict_key"])
+def test_fuse_sequential_terminates_with_delayed_in_set_or_dict_key(shape):
+    # a fusable pair held inside a set, or as a dict key, used to leave the
+    # consumer pointing at the unfused node, so every pass fused it again
+    from pargraph_spark.graphapi import _walk
+
+    calls = []
+
+    @delayed
+    def base(v):
+        calls.append(v)
+        return v
+
+    @delayed
+    def inc(v):
+        return v + 1
+
+    @delayed
+    def total(s):
+        return sum(s)
+
+    @delayed
+    def keysum(d):
+        return sum(k * v for k, v in d.items())
+
+    b = base(5)
+    c = inc(inc(b))  # the outer inc fuses with the inner one
+    held = total({c, 100}) if shape == "set" else keysum({c: 2})
+    root = _add(held, b)  # b keeps two consumers, so it stays shared
+    fused = _call_within(root.to_graph().fuse_sequential)
+    assert len(_walk(fused.roots)) < len(_walk([root]))
+    assert fused.compute() == [112 if shape == "set" else 19]
+    assert calls == [5]  # the shared node still ran once
+
+    # the minimal shapes, with nothing shared
+    for root, want in ((total({inc(base(5)), 100}), 106),
+                       (keysum({inc(base(5)): 2}), 12)):
+        assert _call_within(root.to_graph().fuse_sequential).compute() == [want]
+
+
+def test_graph_direct_call_materializes_frozenset_and_dict_keys():
+    from pargraph_spark.graphapi import graph
+
+    @delayed
+    def inc(x):
+        return x + 1
+
+    @graph
+    def fz(x):
+        return frozenset({inc(x), 1})
+
+    @graph
+    def keyed(x):
+        return {inc(x): "k"}
+
+    assert fz(3) == frozenset({4, 1})
+    assert keyed(3) == {4: "k"}
+
+
+def _sleepy_fan_in(n: int, running: list, peak: list, lock):
+    import time
+
+    @delayed
+    def sleepy(i):
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+        time.sleep(0.0002)
+        with lock:
+            running[0] -= 1
+        return i
+
+    @delayed
+    def total(xs):
+        return sum(xs)
+
+    return total([sleepy(i) for i in range(n)])
+
+
+@pytest.mark.parametrize("with_backend", [False, True])
+def test_max_workers_bounds_running_nodes(with_backend):
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    running, peak, lock = [0], [0], threading.Lock()
+    root = _sleepy_fan_in(4000, running, peak, lock)
+    pool = ThreadPoolExecutor(max_workers=16) if with_backend else None
+    try:
+        assert compute(root, max_workers=3, backend=pool) == [sum(range(4000))]
+    finally:
+        if pool is not None:
+            pool.shutdown()
+    assert 2 <= peak[0] <= 3, peak[0]
+
+
+def test_max_workers_must_be_positive():
+    with pytest.raises(ValueError, match="max_workers"):
+        compute(_add(1, 2), max_workers=0)
+
+
+@pytest.mark.parametrize("with_backend", [False, True])
+def test_node_error_with_wide_frontier_stops_cleanly(with_backend):
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    pool = ThreadPoolExecutor(max_workers=4) if with_backend else None
+    after_ran = []
+
+    @delayed
+    def slow(i):
+        time.sleep(0.0005)
+        return i
+
+    @delayed
+    def boom():
+        time.sleep(0.01)
+        raise RuntimeError("node failure")
+
+    @delayed
+    def after(x):
+        after_ran.append(x)
+        return x
+
+    @delayed
+    def total(xs):
+        return sum(xs)
+
+    failed = boom()
+    root = total([slow(i) for i in range(2000)] + [after(failed), after(after(failed))])
+    before = threading.active_count()
+    try:
+        with pytest.raises(RuntimeError, match="node failure"):
+            compute(root, max_workers=4, backend=pool)
+    finally:
+        if pool is not None:
+            pool.shutdown()  # joins the backend's own threads
+    assert threading.active_count() == before  # every worker joined
+    assert after_ran == []  # no dependent of the failed node ran
+
+
+def test_wide_fan_out_same_results_for_any_worker_count():
+    @delayed
+    def base():
+        return 7
+
+    @delayed
+    def leaf(b, i):
+        return (b * 31 + i) % 1009
+
+    @delayed
+    def group(xs):
+        return sum(xs) % 100_003
+
+    b = base()
+    leaves = [leaf(b, i) for i in range(2400)]
+    roots = [group(leaves[j:j + 40]) for j in range(0, len(leaves), 40)]
+    one = compute(*roots, max_workers=1)
+    assert compute(*roots, max_workers=8) == one
+    assert compute(*roots, scheduler="sync") == one
+
+
+def test_scheduler_stress_more_workers_than_cores():
+    # a lost countdown update would run a node twice, run it before its
+    # dependencies, or never release it (the compute() would hang)
+    import random
+    import sys
+    import threading
+    from collections import Counter
+
+    from pargraph_spark.graphapi import _walk
+
+    runs: Counter = Counter()
+    lock = threading.Lock()
+
+    @delayed
+    def node(i, deps):
+        with lock:
+            runs[i] += 1
+        return (i * 31 + sum(deps)) % 1_000_003
+
+    rng = random.Random(5)
+    layer = [node(i, []) for i in range(100)]
+    for k in range(1, 25):
+        layer = [node(k * 100 + j, rng.sample(layer, rng.randint(1, 4)))
+                 for j in range(100)]
+    expected = compute(*layer, scheduler="sync")
+    runs.clear()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        got = _call_within(lambda: compute(*layer, max_workers=16), 120)
+    finally:
+        sys.setswitchinterval(old)
+    assert got == expected
+    assert len(runs) == len(_walk(layer)) and set(runs.values()) == {1}
